@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -24,3 +25,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+def offset_conf(checkpoint_dir: str, batch_id: int = 0) -> dict[str, str]:
+    """The session conf a streaming query recorded in its offset log
+    for ``batch_id`` (line 2 of ``offsets/<batch_id>`` is the metadata
+    JSON; a restart reads the state partition count back from it)."""
+    with open(os.path.join(checkpoint_dir, "offsets", str(batch_id))) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def state_partition_counts(checkpoint_dir: str) -> dict[str, int]:
+    """Numbered partition directories under each ``state/<op>/`` of a
+    streaming checkpoint, by operator id."""
+    root = os.path.join(checkpoint_dir, "state")
+    return {
+        op: sum(d.isdigit() for d in os.listdir(os.path.join(root, op)))
+        for op in sorted(os.listdir(root))
+        if op.isdigit()
+    }

@@ -15,13 +15,19 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import offset_conf, state_partition_counts
 from travelpulse_spark_stream_tourism_analytics_spark.schemas import (
+    BOOKING_SCHEMA,
     WEATHER_SCHEMA,
     WIRE_SCHEMA,
 )
 from travelpulse_spark_stream_tourism_analytics_spark.streaming import kpis
 from travelpulse_spark_stream_tourism_analytics_spark.streaming.parse import (
+    enrich_bookings,
     parse_events,
+)
+from travelpulse_spark_stream_tourism_analytics_spark.streaming.pipeline import (
+    one_state_partition,
 )
 from travelpulse_spark_stream_tourism_analytics_spark.streaming.simulator import (
     simulate,
@@ -29,6 +35,7 @@ from travelpulse_spark_stream_tourism_analytics_spark.streaming.simulator import
 )
 from travelpulse_spark_stream_tourism_analytics_spark.streaming.sinks import (
     start_parquet_sink,
+    start_query,
 )
 from travelpulse_spark_stream_tourism_analytics_spark.streaming.sources import (
     file_batch,
@@ -103,6 +110,68 @@ def test_parquet_sink_restart_resumes_from_checkpoint(spark, tmp_path):
     assert back.count() == want
     assert back.select("window").distinct().count() == want
     assert back.count() > rows_run1  # restart actually appended
+
+
+def test_kpi_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
+    """A KPI checkpoint created under the session's own shuffle
+    partition count, restarted through the topology's one-partition
+    start path, keeps its original state partition count (Spark reads
+    it back from the offset log) and resumes its state: the restarted
+    query reads only the new file, and the merged output equals the
+    batch recomputation over both files, nothing lost or counted
+    twice."""
+    n_default = spark.conf.get("spark.sql.shuffle.partitions")
+    if int(n_default) < 2:
+        pytest.skip("the session runs with one shuffle partition")
+    src = tmp_path / "wire"
+    chk = str(tmp_path / "chk")
+    latest: dict[tuple, int] = {}
+
+    def collect(df, _bid):
+        rows = df.collect()
+        keys = [(r["window"]["start"], r["city_id"]) for r in rows]
+        assert len(keys) == len(set(keys))  # one row per key per batch
+        latest.update(zip(keys, (r["bookings_365d"] for r in rows)))
+
+    def start(name: str):
+        bookings = enrich_bookings(
+            parse_events(file_stream(spark, str(src)), BOOKING_SCHEMA)
+        ).withWatermark("event_time", "45 seconds")
+        return start_query(
+            kpis.city_bookings_windowed(bookings, "event_time", kpis.DAYS_365, "bookings_365d"),
+            name, chk, collect, trigger={"availableNow": True},
+        )
+
+    events_a = simulate(dt.datetime(2024, 6, 1), n_days=1, events_per_day=60, seed=17)
+    write_wire_fixture(events_a["booking"], str(src / "a.json"))
+    q1 = start("kpi_restart_run1")  # a plain start: the session default
+    assert q1.awaitTermination(300)
+    assert offset_conf(chk)["spark.sql.shuffle.partitions"] == n_default
+    assert set(state_partition_counts(chk).values()) == {int(n_default)}
+    run1 = dict(latest)
+
+    events_b = simulate(dt.datetime(2024, 6, 2), n_days=1, events_per_day=60, seed=19)
+    write_wire_fixture(events_b["booking"], str(src / "b.json"))
+    with one_state_partition(spark):
+        q2 = start("kpi_restart_run2")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == n_default
+    assert q2.awaitTermination(300)
+
+    last_batch = max(p["batchId"] for p in q2.recentProgress)
+    assert offset_conf(chk, last_batch)["spark.sql.shuffle.partitions"] == n_default
+    assert set(state_partition_counts(chk).values()) == {int(n_default)}
+    assert sum(p["numInputRows"] for p in q2.recentProgress) == len(events_b["booking"])
+
+    batch = enrich_bookings(parse_events(file_batch(spark, str(src)), BOOKING_SCHEMA))
+    want = {
+        (r["window"]["start"], r["city_id"]): r["bookings_365d"]
+        for r in kpis.city_bookings_windowed(
+            batch, "event_time", kpis.DAYS_365, "bookings_365d"
+        ).collect()
+    }
+    assert latest == want
+    assert sum(want.values()) == len(events_a["booking"]) + len(events_b["booking"])
+    assert latest != run1  # the restart resumed and updated the state
 
 
 def _write_totals_file(path, batch: list[tuple[str, float]], minute: int) -> None:

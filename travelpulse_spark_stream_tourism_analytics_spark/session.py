@@ -5,6 +5,16 @@ cluster (reference spark/kafka_to_metrics.py:148). We instead enable
 AQE so Spark coalesces/splits shuffle partitions at runtime — the same
 code then scales from local[32] test runs to a 1000-executor cluster
 without retuning.
+
+AQE never resizes a stateful streaming operator: its state partition
+count is ``spark.sql.shuffle.partitions`` at the query's first start,
+kept in the checkpoint's offset log and read back on every restart.
+The KPI topology therefore starts its queries with one state partition
+(``streaming.pipeline.one_state_partition``): each stateful key space
+is windows x cities, so per-core partitions would only multiply the
+state stores and checkpoint files committed per trigger. Existing
+checkpoints keep their count, and the session default set here still
+applies to every other query.
 """
 
 from __future__ import annotations

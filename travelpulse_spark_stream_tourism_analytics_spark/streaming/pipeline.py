@@ -14,6 +14,7 @@ restartable and testable.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
@@ -28,6 +29,31 @@ from travelpulse_spark_stream_tourism_analytics_spark.streaming.sinks import (
 )
 
 TOPN_DEFAULT = 10
+
+#: State-store partitions of every topology query. Each stateful key
+#: space is windows x cities (the whole topology holds tens of state
+#: rows), so more partitions only multiply the state stores, checkpoint
+#: files and filesystem calls committed per trigger. Parsing and the
+#: map-side partial aggregation still run in parallel per source
+#: partition ahead of the single-partition exchange.
+KPI_STATE_PARTITIONS = 1
+
+
+@contextlib.contextmanager
+def one_state_partition(spark: SparkSession):
+    """Start the streaming queries inside this block with
+    KPI_STATE_PARTITIONS state partitions, then restore the session's
+    own ``spark.sql.shuffle.partitions``. ``start()`` clones the session
+    conf into the query, so the value is captured before it returns.
+    Only a first start takes it: a restart reads the count back from
+    the checkpoint's offset log, so existing checkpoints keep theirs."""
+    key = "spark.sql.shuffle.partitions"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, str(KPI_STATE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, previous)
 
 
 # --------------------------- metric mappers --------------------------------
@@ -286,21 +312,22 @@ class TwoPhaseSeasonScore:
         # only batch ran first would skip the push forever ("retried on
         # next trigger" — but availableNow has no next trigger). Extra
         # pushes are harmless under the last-write-wins gauge contract.
-        for name, df, score_after in [
-            ("weather_cs", weather_cs, True),
-            ("flights_cs", flights_cs, True),
-            ("bookings_cs", bookings_cs, True),
-        ]:
-            qs.append(
-                start_query(
-                    df,
-                    f"season_{name}",
-                    os.path.join(checkpoint_root, f"chk_{name}"),
-                    self._snapshot_writer(name, score_after),
-                    mode="complete",
-                    trigger=trigger,
+        with one_state_partition(self.spark):
+            for name, df, score_after in [
+                ("weather_cs", weather_cs, True),
+                ("flights_cs", flights_cs, True),
+                ("bookings_cs", bookings_cs, True),
+            ]:
+                qs.append(
+                    start_query(
+                        df,
+                        f"season_{name}",
+                        os.path.join(checkpoint_root, f"chk_{name}"),
+                        self._snapshot_writer(name, score_after),
+                        mode="complete",
+                        trigger=trigger,
+                    )
                 )
-            )
         return qs
 
 
@@ -323,7 +350,8 @@ def build_all_queries(
 ):
     """Start the full topology (16 queries) off shared parsed
     streams (one Kafka consumer group per query, like the reference's
-    per-query checkpoints; SURVEY.md §2.8 W8)."""
+    per-query checkpoints; SURVEY.md §2.8 W8). Each query starts with
+    one state partition (``one_state_partition``)."""
     from travelpulse_spark_stream_tourism_analytics_spark.streaming.parse import (
         enrich_bookings,
         fork_watermarks,
@@ -337,59 +365,58 @@ def build_all_queries(
 
     chk = lambda n: os.path.join(checkpoint_root, n)  # noqa: E731
     mm = foreach_metrics
-    queries = [
-        start_query(kpis.ingest_counter(weather_ing), "ingest_counter",
-                    chk("chk_i"), mm(map_batch_counts, sink), trigger=trigger),
-        start_query(kpis.weather_minute_counts(weather_ing), "weather_cnt",
-                    chk("chk_w"), mm(map_batch_counts, sink), trigger=trigger),
-        start_query(kpis.flight_minute_counts(flights_ing), "flights_cnt",
-                    chk("chk_f"), mm(map_batch_counts, sink), trigger=trigger),
-        start_query(kpis.booking_minute_counts(bookings_ing), "bookings_cnt",
-                    chk("chk_b"), mm(map_batch_counts, sink), trigger=trigger),
-        start_query(kpis.airport_flow(flights_ing, "inbound"), "airports_inbound",
-                    chk("chk_air_in"),
-                    mm(lambda df: map_airports_top(df, "inbound", topn), sink),
-                    trigger=trigger),
-        start_query(kpis.airport_flow(flights_ing, "outbound"), "airports_outbound",
-                    chk("chk_air_out"),
-                    mm(lambda df: map_airports_top(df, "outbound", topn), sink),
-                    trigger=trigger),
-        start_query(
-            kpis.city_bookings_windowed(bookings_ing, "ingest_time", kpis.MINUTE, "bookings"),
-            "top_cities_minute", chk("chk_city_min"),
-            mm(lambda df: map_city_topn(df, "bookings", "1m", topn), sink),
-            trigger=trigger),
-        start_query(
-            kpis.city_bookings_windowed(bookings_evt, "event_time", kpis.DAYS_30, "bookings_30d"),
-            "top_cities_30d", chk("chk_city_30d"),
-            mm(lambda df: map_city_topn(df, "bookings_30d", "30d", topn), sink),
-            trigger=trigger),
-        start_query(
-            kpis.city_bookings_windowed(bookings_evt, "event_time", kpis.DAYS_365, "bookings_365d"),
-            "top_cities_365d", chk("chk_city_365d"),
-            mm(lambda df: map_city_topn(df, "bookings_365d", "365d", topn), sink),
-            trigger=trigger),
-    ]
     b_city_min = kpis.city_bookings_windowed(
         bookings_ing, "ingest_time", kpis.MINUTE, "bookings"
     )
-    queries += [
-        start_query(
-            kpis.arrivals_today(bookings_enriched, as_of=as_of), "city_today",
-            chk("chk_city_today"),
-            mm(lambda df: map_city_today(df, topn), sink),
-            mode="complete", trigger=trigger),
-        start_query(
-            kpis.month_rollup(bookings_evt), "month_roll_365",
-            chk("chk_month_roll"), mm(map_month_roll, sink), trigger=trigger),
-        start_query(
-            kpis.season_rollup(bookings_evt), "season_roll_365",
-            chk("chk_season_roll"), mm(map_season_roll, sink), trigger=trigger),
-        start_query(
-            kpis.geo_enrich(b_city_min, city_dim), "cities_geomap",
-            chk("chk_city_geo"),
-            mm(lambda df: map_city_geomap(df, topn), sink), trigger=trigger),
-    ]
+    with one_state_partition(spark):
+        queries = [
+            start_query(kpis.ingest_counter(weather_ing), "ingest_counter",
+                        chk("chk_i"), mm(map_batch_counts, sink), trigger=trigger),
+            start_query(kpis.weather_minute_counts(weather_ing), "weather_cnt",
+                        chk("chk_w"), mm(map_batch_counts, sink), trigger=trigger),
+            start_query(kpis.flight_minute_counts(flights_ing), "flights_cnt",
+                        chk("chk_f"), mm(map_batch_counts, sink), trigger=trigger),
+            start_query(kpis.booking_minute_counts(bookings_ing), "bookings_cnt",
+                        chk("chk_b"), mm(map_batch_counts, sink), trigger=trigger),
+            start_query(kpis.airport_flow(flights_ing, "inbound"), "airports_inbound",
+                        chk("chk_air_in"),
+                        mm(lambda df: map_airports_top(df, "inbound", topn), sink),
+                        trigger=trigger),
+            start_query(kpis.airport_flow(flights_ing, "outbound"), "airports_outbound",
+                        chk("chk_air_out"),
+                        mm(lambda df: map_airports_top(df, "outbound", topn), sink),
+                        trigger=trigger),
+            start_query(
+                kpis.city_bookings_windowed(bookings_ing, "ingest_time", kpis.MINUTE, "bookings"),
+                "top_cities_minute", chk("chk_city_min"),
+                mm(lambda df: map_city_topn(df, "bookings", "1m", topn), sink),
+                trigger=trigger),
+            start_query(
+                kpis.city_bookings_windowed(bookings_evt, "event_time", kpis.DAYS_30, "bookings_30d"),
+                "top_cities_30d", chk("chk_city_30d"),
+                mm(lambda df: map_city_topn(df, "bookings_30d", "30d", topn), sink),
+                trigger=trigger),
+            start_query(
+                kpis.city_bookings_windowed(bookings_evt, "event_time", kpis.DAYS_365, "bookings_365d"),
+                "top_cities_365d", chk("chk_city_365d"),
+                mm(lambda df: map_city_topn(df, "bookings_365d", "365d", topn), sink),
+                trigger=trigger),
+            start_query(
+                kpis.arrivals_today(bookings_enriched, as_of=as_of), "city_today",
+                chk("chk_city_today"),
+                mm(lambda df: map_city_today(df, topn), sink),
+                mode="complete", trigger=trigger),
+            start_query(
+                kpis.month_rollup(bookings_evt), "month_roll_365",
+                chk("chk_month_roll"), mm(map_month_roll, sink), trigger=trigger),
+            start_query(
+                kpis.season_rollup(bookings_evt), "season_roll_365",
+                chk("chk_season_roll"), mm(map_season_roll, sink), trigger=trigger),
+            start_query(
+                kpis.geo_enrich(b_city_min, city_dim), "cities_geomap",
+                chk("chk_city_geo"),
+                mm(lambda df: map_city_geomap(df, topn), sink), trigger=trigger),
+        ]
     scorer = TwoPhaseSeasonScore(spark, staging_dir, sink, topn)
     queries += scorer.queries(
         bookings_evt, weather_evt, flights_evt, checkpoint_root, trigger

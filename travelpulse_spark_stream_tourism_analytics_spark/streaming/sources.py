@@ -1,7 +1,7 @@
 """Stream sources, all normalized to the WIRE_SCHEMA contract
 (key string, value string, kafka_ts timestamp) so every downstream
-transform is source-agnostic — Kafka in production, files/rate/memory
-in tests (the reference is Kafka-only; reference
+transform is source-agnostic — Kafka in production, files/memory in
+tests (the reference is Kafka-only; reference
 spark/kafka_to_metrics.py:156-169)."""
 
 from __future__ import annotations
@@ -252,27 +252,3 @@ def file_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch read of the same fixture files — used to prove
     stream/batch parity of every KPI transform."""
     return spark.read.schema(WIRE_SCHEMA).json(path)
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Throughput-test source mapped onto the wire contract."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            F.col("value").cast("string").alias("key"),
-            F.to_json(
-                F.struct(
-                    F.lit("1").alias("schema_version"),
-                    F.lit("rate").alias("event_type"),
-                    F.date_format(
-                        "timestamp", "yyyy-MM-dd'T'HH:mm:ss'Z'"
-                    ).alias("event_ts"),
-                )
-            ).alias("value"),
-            F.col("timestamp").alias("kafka_ts"),
-        )
-    )
