@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -112,19 +113,11 @@ def test_parquet_sink_restart_resumes_from_checkpoint(spark, tmp_path):
     assert back.count() > rows_run1  # restart actually appended
 
 
-def test_kpi_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
-    """A KPI checkpoint created under the session's own shuffle
-    partition count, restarted through the topology's one-partition
-    start path, keeps its original state partition count (Spark reads
-    it back from the offset log) and resumes its state: the restarted
-    query reads only the new file, and the merged output equals the
-    batch recomputation over both files, nothing lost or counted
-    twice."""
-    n_default = spark.conf.get("spark.sql.shuffle.partitions")
-    if int(n_default) < 2:
-        pytest.skip("the session runs with one shuffle partition")
-    src = tmp_path / "wire"
-    chk = str(tmp_path / "chk")
+def _city_kpi_query(spark, src, chk):
+    """The 365-day city bookings KPI over the wire files in ``src``,
+    checkpointed at ``chk``. Returns ``start(name)`` and the dict in
+    which its foreachBatch keeps the latest count per (window start,
+    city)."""
     latest: dict[tuple, int] = {}
 
     def collect(df, _bid):
@@ -141,6 +134,35 @@ def test_kpi_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
             kpis.city_bookings_windowed(bookings, "event_time", kpis.DAYS_365, "bookings_365d"),
             name, chk, collect, trigger={"availableNow": True},
         )
+
+    return start, latest
+
+
+def _city_kpi_batch(spark, src) -> dict[tuple, int]:
+    """Batch recomputation of the same KPI over every file in ``src``."""
+    batch = enrich_bookings(parse_events(file_batch(spark, str(src)), BOOKING_SCHEMA))
+    return {
+        (r["window"]["start"], r["city_id"]): r["bookings_365d"]
+        for r in kpis.city_bookings_windowed(
+            batch, "event_time", kpis.DAYS_365, "bookings_365d"
+        ).collect()
+    }
+
+
+def test_kpi_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
+    """A KPI checkpoint created under the session's own shuffle
+    partition count, restarted through the topology's one-partition
+    start path, keeps its original state partition count (Spark reads
+    it back from the offset log) and resumes its state: the restarted
+    query reads only the new file, and the merged output equals the
+    batch recomputation over both files, nothing lost or counted
+    twice."""
+    n_default = spark.conf.get("spark.sql.shuffle.partitions")
+    if int(n_default) < 2:
+        pytest.skip("the session runs with one shuffle partition")
+    src = tmp_path / "wire"
+    chk = str(tmp_path / "chk")
+    start, latest = _city_kpi_query(spark, src, chk)
 
     events_a = simulate(dt.datetime(2024, 6, 1), n_days=1, events_per_day=60, seed=17)
     write_wire_fixture(events_a["booking"], str(src / "a.json"))
@@ -162,16 +184,74 @@ def test_kpi_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
     assert set(state_partition_counts(chk).values()) == {int(n_default)}
     assert sum(p["numInputRows"] for p in q2.recentProgress) == len(events_b["booking"])
 
-    batch = enrich_bookings(parse_events(file_batch(spark, str(src)), BOOKING_SCHEMA))
-    want = {
-        (r["window"]["start"], r["city_id"]): r["bookings_365d"]
-        for r in kpis.city_bookings_windowed(
-            batch, "event_time", kpis.DAYS_365, "bookings_365d"
-        ).collect()
-    }
+    want = _city_kpi_batch(spark, src)
     assert latest == want
     assert sum(want.values()) == len(events_a["booking"]) + len(events_b["booking"])
     assert latest != run1  # the restart resumed and updated the state
+
+
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _offset_log_manager(query) -> str:
+    """Class name of the checkpoint file manager behind the query's
+    offset log."""
+    jq = query._jsq.streamingQuery()
+    return jq.offsetLog().fileManager().getClass().getName()
+
+
+def _crc_sidecars_missing(checkpoint_dir) -> list[str]:
+    """Offset- and commit-log files without Hadoop's ``.<name>.crc``."""
+    missing = []
+    for log in ("offsets", "commits"):
+        files = set(os.listdir(os.path.join(checkpoint_dir, log)))
+        missing += [f"{log}/{f}" for f in files if f.isdigit() and f".{f}.crc" not in files]
+    return missing
+
+
+def test_filecontext_checkpoint_restarts_under_filesystem_manager(spark, tmp_path):
+    """A KPI checkpoint written entirely under Spark's FileContext
+    checkpoint file manager (the default before ``get_spark`` chose the
+    FileSystem one) restarts under the session's FileSystem manager
+    with new data: the restarted query reads only the new file, its
+    offset log goes through the FileSystem manager, both runs leave
+    Hadoop's ``.crc`` sidecars, and the output equals the batch
+    recomputation over both files, nothing lost or counted twice."""
+    session_manager = spark.conf.get(CHECKPOINT_MANAGER)
+    assert session_manager == CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+    src = tmp_path / "wire"
+    chk = str(tmp_path / "chk")
+    start, latest = _city_kpi_query(spark, src, chk)
+
+    events_a = simulate(dt.datetime(2024, 6, 1), n_days=1, events_per_day=60, seed=23)
+    write_wire_fixture(events_a["booking"], str(src / "a.json"))
+    # The whole first run, source log included (a file source creates
+    # it lazily from the DataFrame's session), under FileContext.
+    spark.conf.set(CHECKPOINT_MANAGER, CHECKPOINTING + "FileContextBasedCheckpointFileManager")
+    try:
+        q1 = start("fc_checkpoint_run1")
+        assert _offset_log_manager(q1).endswith(".FileContextBasedCheckpointFileManager")
+        assert q1.awaitTermination(300)
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER, session_manager)
+    assert q1.exception() is None
+    assert _crc_sidecars_missing(chk) == []
+
+    events_b = simulate(dt.datetime(2024, 6, 2), n_days=1, events_per_day=60, seed=29)
+    write_wire_fixture(events_b["booking"], str(src / "b.json"))
+    q2 = start("fc_checkpoint_run2")
+    assert _offset_log_manager(q2) == session_manager
+    assert q2.awaitTermination(300)
+    assert q2.exception() is None
+
+    assert min(p["batchId"] for p in q2.recentProgress) > 0  # resumed, not restarted
+    assert _crc_sidecars_missing(chk) == []
+    assert sum(p["numInputRows"] for p in q2.recentProgress) == len(events_b["booking"])
+
+    want = _city_kpi_batch(spark, src)
+    assert latest == want
+    assert sum(want.values()) == len(events_a["booking"]) + len(events_b["booking"])
 
 
 def _write_totals_file(path, batch: list[tuple[str, float]], minute: int) -> None:

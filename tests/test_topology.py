@@ -1,9 +1,10 @@
 """The whole 16-query KPI topology of ``build_all_queries``, drained
-once with ``availableNow`` over a small simulated corpus replayed as
-Kafka frames: every query terminates cleanly, each starts with one
-state partition, the session conf is left as it was found, and the
-gauges that do not depend on micro-batch boundaries equal a batch
-recomputation with the same ``kpis`` and mapper functions."""
+with ``availableNow`` over a small simulated corpus replayed as Kafka
+frames: every query terminates cleanly, each starts with one state
+partition, the session conf is left as it was found, the gauges that
+do not depend on micro-batch boundaries equal a batch recomputation
+with the same ``kpis`` and mapper functions, and a second drain into
+fresh checkpoints reuses the generated classes of the first."""
 
 from __future__ import annotations
 
@@ -70,27 +71,18 @@ def _boundary_free(gauges: dict) -> dict:
     return out
 
 
-def test_topology_drains_with_one_state_partition(spark, tmp_path):
-    # Three June days: one 365-day window, so its top cities are final.
-    events = simulate(dt.datetime(2024, 6, 1), n_days=3, events_per_day=60, seed=5)
-    frames = tmp_path / "frames"
-    for kind in SCHEMAS:
-        wire = str(tmp_path / "wire" / f"{kind}.jsonl")
-        write_wire_fixture(events[kind], wire)
-        write_kafka_frame_fixture(spark, wire, str(frames / kind), kind, n_partitions=2)
+def _drain(spark, frames, run_dir):
+    """One ``availableNow`` drain of all 16 queries over ``frames``,
+    checkpointed under ``run_dir``. Returns the queries and the sink."""
     src = {
         kind: parse_events(kafka_frame_replay(spark, str(frames / kind)), schema)
         for kind, schema in SCHEMAS.items()
     }
-
-    conf_before = spark.conf.getAll
-    partitions_before = spark.conf.get("spark.sql.shuffle.partitions")
     sink = MemoryMetricSink()
-    chk_root = str(tmp_path / "chk")
     queries, _scorer = pipeline.build_all_queries(
         spark, src["weather"], src["flight"], src["booking"],
         spark.createDataFrame(CITY_DIM, CITY_DIM_SCHEMA), sink,
-        checkpoint_root=chk_root, staging_dir=str(tmp_path / "staging"),
+        checkpoint_root=str(run_dir / "chk"), staging_dir=str(run_dir / "staging"),
         trigger={"availableNow": True}, as_of=F.lit(dt.date(2024, 6, 2)),
     )
     try:
@@ -100,11 +92,37 @@ def test_topology_drains_with_one_state_partition(spark, tmp_path):
         for q in queries:
             if q.isActive:
                 q.stop()
+    return queries, sink
+
+
+@pytest.fixture(scope="module")
+def first_drain(spark, tmp_path_factory):
+    """The simulated corpus as Kafka frames, and one drain of it."""
+    # Three June days: one 365-day window, so its top cities are final.
+    events = simulate(dt.datetime(2024, 6, 1), n_days=3, events_per_day=60, seed=5)
+    root = tmp_path_factory.mktemp("topology")
+    frames = root / "frames"
+    for kind in SCHEMAS:
+        wire = str(root / "wire" / f"{kind}.jsonl")
+        write_wire_fixture(events[kind], wire)
+        write_kafka_frame_fixture(spark, wire, str(frames / kind), kind, n_partitions=2)
+    conf_before = spark.conf.getAll
+    queries, sink = _drain(spark, frames, root / "first")
+    return {
+        "events": events, "frames": frames, "chk_root": str(root / "first" / "chk"),
+        "queries": queries, "sink": sink,
+        "conf_before": conf_before, "conf_after": spark.conf.getAll,
+    }
+
+
+def test_topology_drains_with_one_state_partition(spark, first_drain):
+    events, frames = first_drain["events"], first_drain["frames"]
+    queries, sink = first_drain["queries"], first_drain["sink"]
+    chk_root = first_drain["chk_root"]
 
     assert len(queries) == 16
     assert [q.name for q in queries if q.exception() is not None] == []
-    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions_before
-    assert spark.conf.getAll == conf_before
+    assert first_drain["conf_after"] == first_drain["conf_before"]
 
     checkpoints = sorted(os.listdir(chk_root))
     assert len(checkpoints) == 16
@@ -138,3 +156,20 @@ def test_topology_drains_with_one_state_partition(spark, tmp_path):
     for key, (labels, value) in want.items():
         assert got[key][0] == labels, key
         assert got[key][1] == pytest.approx(value, rel=1e-9), key
+
+
+def test_second_drain_reuses_generated_classes(spark, first_drain, tmp_path):
+    """Spark caches Janino-compiled classes JVM-wide, up to
+    ``spark.sql.codegen.cache.maxEntries``. ``get_spark`` sizes that
+    cache above the topology's working set, so a second drain of the
+    same plans into fresh checkpoints compiles (almost) nothing new.
+    At Spark's default of 100 entries each drain evicted and
+    recompiled several hundred classes."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled_before = codegen.METRIC_COMPILATION_TIME().getCount()
+    queries, sink = _drain(spark, first_drain["frames"], tmp_path)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled_before
+
+    assert [q.name for q in queries if q.exception() is not None] == []
+    assert compiled <= 5, f"{compiled} classes compiled again"
+    assert _boundary_free(sink.latest()) == _boundary_free(first_drain["sink"].latest())

@@ -508,11 +508,20 @@ def lsh_candidate_pairs(bands_df: DataFrame, id_col: str) -> DataFrame:
 def pair_jaccard(
     pairs: DataFrame, shingled: DataFrame, id_col: str
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs (verify stage).
+    """N-gram Jaccard for candidate pairs (verify stage), exact modulo
+    64-bit hash collisions.
 
-    Joins each side's shingle set; |A∩B| from the matched rows,
-    |A∪B| = |A|+|B|-|A∩B|. Runs only on LSH candidates, so the join
-    fan-out is bounded by bucket sizes, not the corpus.
+    Joins each side's shingle set on ``xxhash64(shingle)``; |A∩B| from
+    the matched rows, |A∪B| = |A|+|B|-|A∩B|. Runs only on LSH
+    candidates, so the join fan-out is bounded by bucket sizes, not
+    the corpus.
+
+    A pair's score can be wrong only if two distinct shingles of
+    A ∪ B share a hash: probability at most C(|A|+|B|, 2) / 2^64 per
+    pair, about 1e-13 for two 1,000-shingle documents. Across a corpus
+    of n distinct shingles the expected number of colliding shingle
+    pairs is about n^2 / 2^65: ~7e-7 at 5M, but ~2.7e4 at 1e12, where
+    some collision is certain and only the per-pair bound still holds.
     """
     # The shingle relation feeds four consumers below (two joins, two
     # size lookups). Bounded scoped persist is the measured optimum at

@@ -1007,7 +1007,8 @@ def graph_rank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     are timed once, under ``graph_suite``. One ``pagerank_multi`` pass
     computes BOTH columns (operators/graph.py) — one join + one
     map-side-combined shuffle per iteration, shared across the two
-    output arms via the scoped persist in
+    output arms through the eager ``localCheckpoint`` that
+    ``_truncate_lineage`` applies in
     ``supplier_customer_rank_variants``."""
     # supplier_customer_rank_variants returns the fused ranks already
     # MATERIALIZED behind an eager localCheckpoint (round 11): the two

@@ -15,6 +15,31 @@ is windows x cities, so per-core partitions would only multiply the
 state stores and checkpoint files committed per trigger. Existing
 checkpoints keep their count, and the session default set here still
 applies to every other query.
+
+Two settings remove work the driver would otherwise repeat on every
+streaming trigger and every catalog pass:
+
+- ``spark.sql.codegen.cache.maxEntries`` (Spark default 100) bounds
+  the JVM-wide cache of Janino-compiled classes. The 16 KPI queries
+  and the catalog each need several hundred, so at 100 every drain
+  and every pass compiled again what the previous one had evicted.
+  It is a static conf: it takes effect only when set on the builder
+  before the first session of the JVM, so only ``get_spark`` can
+  size it. A session started elsewhere keeps Spark's 100.
+- ``spark.sql.streaming.checkpointFileManagerClass`` selects the
+  FileSystem-based checkpoint file manager. Spark's default goes
+  through Hadoop's FileContext, whose local rename resolves symlinks
+  with a ``readlink`` subprocess (4 per checkpoint file) when the
+  native Hadoop library is absent; the FileSystem manager renames
+  with ``File.renameTo``. On a local filesystem both managers write
+  the same files (Spark's checksum files and Hadoop's ``.crc``
+  sidecars included) to a temp file, check that the target does not
+  exist and then do a POSIX rename, so checkpoints written under
+  either one restart under the other. On HDFS and other non-local
+  roots the rename stays atomic, but the no-overwrite check becomes
+  ``exists()`` followed by ``rename`` instead of one namenode call:
+  that matters only if two drivers share one checkpoint, which
+  Structured Streaming does not support anyway.
 """
 
 from __future__ import annotations
@@ -64,6 +89,27 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", str(64 * 1024 * 1024)),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Sized from measured working sets (distinct generated classes
+        # per JVM, 4 cores): the 16 KPI queries ~330,
+        # the 12 perfbench catalog entries ~500, bench.py's 16 entries
+        # plus its stream row ~1,450; 4000 holds all three in one JVM
+        # with headroom. At 100 each warm 30k-event drain compiled
+        # ~370 classes again and each warm catalog pass ~525; at 4000
+        # the next three drains compiled 4, 0, 0 and the passes 30,
+        # 0, 0. The price is metaspace for the kept classes: 191 ->
+        # 200 MB used after bench.py. Static conf (see the module
+        # docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # 1,408 `readlink` forks per warm 30k-event KPI drain at
+        # 4 cores under the FileContext default, 0 with this manager.
+        # Set for the whole session, not around start(): a file source
+        # creates its source log lazily, from the session the
+        # DataFrame was built in.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Snappy parquet decompresses ~4-8x, so the 128 MB default can
         # hand one task a multi-GB in-memory partition — and on small
