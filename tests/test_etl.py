@@ -319,6 +319,40 @@ def test_connected_components_star_matches_union_find(spark):
             assert got_lp == expected, name
 
 
+
+def test_connected_components_star_failure_runs_once(spark):
+    """A relation whose own job fails raises from the operator's first
+    checkpoint, and the failing job runs once: no fallback swallows the
+    error and lets a later action run the same job again."""
+    import time
+
+    from travelpulse_spark_stream_tourism_analytics_spark.operators.components import (
+        connected_components_star,
+    )
+
+    sc = spark.sparkContext
+    group = "cc-star-failure-once"
+    pairs = spark.range(16).select(
+        F.col("id").alias("id_a"),
+        F.when(F.col("id") < 0, F.col("id"))
+        .otherwise(F.raise_error(F.lit("planted edge failure")))
+        .alias("id_b"),
+    )
+    sc.setJobGroup(group, "failure-once probe")
+    try:
+        with pytest.raises(Exception, match="planted edge failure"):
+            connected_components_star(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    tracker = sc.statusTracker()
+    for _ in range(100):  # job-end events reach the tracker asynchronously
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if all(j.status != "RUNNING" for j in jobs):
+            break
+        time.sleep(0.1)
+    assert [j.status for j in jobs] == ["FAILED"]
+
 def test_check_constraints(spark):
     from pyspark.sql import functions as F
 

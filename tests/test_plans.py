@@ -591,3 +591,40 @@ def test_remove_dup_spans_plan_shape(spark):
     # exactly one occurrence-side explode feeds the join (posexplode
     # of the positional windows) plus the detector's own explode
     assert plan.count("Generate") >= 2
+
+
+def test_build_arms_reports_every_failed_arm_and_inherits_properties(spark):
+    """``build_arms`` joins every arm, raises ONE error naming each
+    failed arm (chained from the first), and runs arms on
+    InheritableThreads: an arm sees the caller's job description."""
+    from travelpulse_spark_stream_tourism_analytics_spark.plans.catalog import (
+        build_arms,
+    )
+
+    def failing(msg):
+        def arm():
+            raise ValueError(msg)
+
+        return arm
+
+    sc = spark.sparkContext
+    with pytest.raises(RuntimeError) as info:
+        build_arms(
+            "probe",
+            {"bad_a": failing("a"), "good": lambda: 1, "bad_b": failing("b")},
+        )
+    msg = str(info.value)
+    assert msg.startswith("probe: arm build failed: ")
+    assert "bad_a" in msg and "bad_b" in msg and "good" not in msg
+    assert isinstance(info.value.__cause__, ValueError)
+    assert str(info.value.__cause__) == "a"
+
+    sc.setJobDescription("build-arms probe")
+    try:
+        built = build_arms(
+            "probe",
+            {"desc": lambda: sc.getLocalProperty("spark.job.description")},
+        )
+    finally:
+        sc.setJobDescription(None)
+    assert built == {"desc": "build-arms probe"}

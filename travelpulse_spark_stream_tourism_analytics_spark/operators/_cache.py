@@ -14,8 +14,8 @@ cached lineage — re-invoking the operator unpersists the previous
 one — and ``clear_operator_caches()`` releases everything (bench.py
 additionally calls ``spark.catalog.clearCache()`` between queries).
 
-Several plan builders now persist from concurrent driver threads
-(graph_suite / docs_top_terms / knn arm builders), so ``_LIVE`` is
+The only threaded caller is ``plans.catalog.build_arms``, which
+builds a plan's arms on concurrent driver threads, so ``_LIVE`` is
 guarded by a lock and each site records its owning thread: re-
 persisting a site that a DIFFERENT, still-running worker thread owns
 would race ``unpersist(blocking=True)`` against that thread's reads
@@ -24,6 +24,16 @@ thread is exempt as an owner — entries run sequentially from it and
 it joins worker threads before reading, so a site it persisted in an
 earlier entry is never concurrently read when a later entry's worker
 thread re-persists it.
+
+The owner guard is best-effort. It covers only persist-vs-persist
+races on one site: a thread that merely READS a cached relation it
+did not persist is not recorded anywhere, so nothing stops another
+thread from unpersisting it mid-read. And ``owner.is_alive()`` is a
+time-of-check/time-of-use test of the owning thread, not of the
+cached relation: once the owner exits, the relation it returned may
+still be read by its caller while another thread re-persists the
+site, and an owner that is finishing right at the check raises an
+error it need not.
 """
 
 from __future__ import annotations

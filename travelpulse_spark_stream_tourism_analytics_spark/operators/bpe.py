@@ -121,10 +121,7 @@ def train_bpe(
     syms = word_counts(docs, text_col).select(
         chars_of(F.col("word")).alias("syms"), "wc"
     )
-    try:
-        syms = syms.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - checkpoint dir unavailable
-        syms = syms.persist()
+    syms = syms.localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         top = (
@@ -140,10 +137,7 @@ def train_bpe(
         syms = syms.select(
             apply_merge(F.col("syms"), left, right).alias("syms"), "wc"
         )
-        try:
-            syms = syms.localCheckpoint(eager=True)
-        except Exception:  # pragma: no cover
-            syms = syms.persist()
+        syms = syms.localCheckpoint(eager=True)
     return merges
 
 

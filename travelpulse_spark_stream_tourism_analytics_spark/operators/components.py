@@ -13,9 +13,11 @@ join/groupBy building blocks.
 
 Scale: each round is two self-joins + aggregations on the edge list;
 edges shrink monotonically toward star graphs. Convergence is checked
-with a cheap count of changed assignments. At 100 TB you checkpoint
-the edge list every few rounds to truncate lineage (done here via
-localCheckpoint when available).
+with a cheap count of changed assignments. Lineage is truncated with
+``localCheckpoint``: eagerly for the initial edge list, lazily per
+round so the convergence check's action materializes it in the same
+job. At 100 TB a reliable ``checkpoint()`` every few rounds does the
+same job and survives executor loss.
 """
 
 from __future__ import annotations
@@ -49,10 +51,7 @@ def connected_components(
     # sf1 soak (docs_dedup_clusters ~305 s; the propagation itself is
     # a few seconds per round). At cluster scale this is the
     # 'checkpoint the edge list' step from the module docstring.
-    try:
-        neighbors = neighbors.localCheckpoint(eager=True)
-    except Exception:
-        neighbors = neighbors.persist()
+    neighbors = neighbors.localCheckpoint(eager=True)
     assign = neighbors.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("c"))
     assign = assign.select(
         F.col("u").alias("node"), F.least("c", "u").alias("comp")
@@ -76,10 +75,7 @@ def connected_components(
         # side effect, where an eager checkpoint ran its own job first
         # and the count a second. Blocks land before any later round
         # re-reads new_assign, so lineage is truncated identically.
-        try:
-            new_assign = new_assign.localCheckpoint(eager=False)
-        except Exception:
-            new_assign = new_assign.persist()
+        new_assign = new_assign.localCheckpoint(eager=False)
         changed = (
             new_assign.alias("n")
             .join(assign.alias("o"), F.col("n.node") == F.col("o.node"))
@@ -137,10 +133,7 @@ def connected_components_star(
     # re-executes the whole upstream pair lineage — for LSH near-dup
     # input that is shingle -> minhash -> banded join — once per
     # reference to `e` (sym + mins + join).
-    try:
-        edges = edges.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - checkpoint dir unavailable
-        edges = edges.persist()
+    edges = edges.localCheckpoint(eager=True)
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -188,10 +181,7 @@ def connected_components_star(
         # two — guide §1.2). The next round's references then read the
         # cached blocks exactly as with the eager form; the checksum
         # value — and so the convergence decision — is unchanged.
-        try:
-            edges = edges.localCheckpoint(eager=False)
-        except Exception:
-            edges = edges.persist()
+        edges = edges.localCheckpoint(eager=False)
         cur = _checksum(edges)
         if cur == prev:
             break

@@ -315,17 +315,7 @@ def pagerank_multi(
             # the dangling-mass aggregate references the previous ranks
             # a second time; without truncation the plan doubles per
             # iteration (2^iters subtrees)
-            try:
-                ranks = ranks.localCheckpoint(eager=True)
-            except Exception:  # pragma: no cover - checkpoint unavailable
-                # degraded fallback: persist is LAZY and truncates
-                # nothing — force materialization so each subsequent
-                # action at least reads the cache instead of
-                # recomputing both subtrees (the logical plan still
-                # grows, so deep runs should fix their checkpoint
-                # storage rather than lean on this path)
-                ranks = ranks.persist()
-                ranks.count()
+            ranks = ranks.localCheckpoint(eager=True)
         elif checkpoint_every and (i + 1) % checkpoint_every == 0:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", *names)
@@ -441,10 +431,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
         .filter(F.col("a") < F.col("b"))
         .distinct()
     )
-    try:
-        e = e.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - checkpoint dir unavailable
-        e = e.persist()
+    e = e.localCheckpoint(eager=True)
     n_prev = e.count()
     for _ in range(max_rounds):
         deg = (
@@ -462,10 +449,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 100) -> DataFrame:
         # first and the count a second — components.py precedent);
         # this round's count is next round's n_prev, and the next
         # round's four references to e read the cached blocks
-        try:
-            nxt = nxt.localCheckpoint(eager=False)
-        except Exception:  # pragma: no cover
-            nxt = nxt.persist()
+        nxt = nxt.localCheckpoint(eager=False)
         n_next = nxt.count()
         e = nxt
         fixed = n_next == n_prev
@@ -530,10 +514,7 @@ def label_propagation(
         )
     e = edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     e = e.repartition(n_part, "src")
-    try:
-        e = e.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - checkpoint dir unavailable
-        e = e.persist()
+    e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -552,10 +533,7 @@ def label_propagation(
         labels = nodes.select(
             "node", F.col("node").alias("label"), F.lit(False).alias("__clamped")
         )
-    try:
-        labels = labels.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover
-        labels = labels.persist()
+    labels = labels.localCheckpoint(eager=True)
     w_pick = Window.partitionBy("dst").orderBy(
         F.desc("wsum"), F.asc("in_label")
     )
@@ -580,11 +558,7 @@ def label_propagation(
             .alias("label"),
             "__clamped",
         )
-        try:
-            nxt = nxt.localCheckpoint(eager=True)
-        except Exception:  # pragma: no cover
-            nxt = nxt.persist()
-        labels = nxt
+        labels = nxt.localCheckpoint(eager=True)
     return labels.select("node", "label")
 
 
@@ -630,10 +604,7 @@ def hyperball(
     n_part = partitions or spark.sparkContext.defaultParallelism
     e = edges.select("src", "dst").distinct()
     e = e.repartition(n_part, "src")
-    try:
-        e = e.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - checkpoint dir unavailable
-        e = e.persist()
+    e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -642,10 +613,7 @@ def hyperball(
     balls = nodes.groupBy("node").agg(
         F.hll_sketch_agg("node", lg_k).alias("ball")
     ).withColumn("est", F.lit(1.0)).withColumn("harmonic", F.lit(0.0))
-    try:
-        balls = balls.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover
-        balls = balls.persist()
+    balls = balls.localCheckpoint(eager=True)
     for t in range(1, max_t + 1):
         grown = (
             e.join(balls, e.src == balls.node)
@@ -676,11 +644,7 @@ def hyperball(
                 ).alias("harmonic"),
             )
         )
-        try:
-            nxt = nxt.localCheckpoint(eager=True)
-        except Exception:  # pragma: no cover
-            nxt = nxt.persist()
-        balls = nxt
+        balls = nxt.localCheckpoint(eager=True)
     # est counts v itself (seeded with {v}); reach excludes it
     return balls.select(
         "node",

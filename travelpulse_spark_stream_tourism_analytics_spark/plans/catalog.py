@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -115,6 +116,54 @@ def repair_coarse_scan(spark, df, path: str, min_rows: int = 90_000):
         # Non-local path or unreadable footer: leave the scan alone.
         pass
     return df
+
+
+def build_arms(entry: str, builders: dict[str, Callable[[], object]]) -> dict:
+    """Run every ``builders[key]()`` on its own ``InheritableThread``
+    and return ``{key: result}``.
+
+    The iterative and sketch-backed branch constructors run eager
+    driver-side jobs while the DataFrame is BUILT (per-round
+    localCheckpoints, centroid and vocabulary collects, corpus-stat
+    counts); built one after another those jobs leave most of the
+    cluster idle (guide §2.6 "overlap independent jobs"). An
+    ``InheritableThread`` carries the caller's local properties (job
+    group, description, scheduler pool) into its arm. The caller
+    materializes any cache its arms share BEFORE this call, so arms
+    never race to compute it, and each arm owns its own
+    ``scoped_persist`` sites. Arm results are deterministic and the
+    caller assembles them in a fixed order, so output is identical to
+    a serial build.
+
+    All arms are joined before anything is raised. Failed arms raise
+    one ``RuntimeError`` naming each of them, chained from the first
+    failed arm in ``builders`` order; only ``Exception`` is caught, so
+    ``KeyboardInterrupt``/``SystemExit`` are not turned into arm
+    errors.
+    """
+    built: dict = {}
+    errors: dict[str, Exception] = {}
+
+    def _run(key, fn):
+        try:
+            built[key] = fn()
+        except Exception as exc:  # re-raised on the caller thread below
+            errors[key] = exc
+
+    threads = [
+        InheritableThread(target=_run, args=item) for item in builders.items()
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        failed = [k for k in builders if k in errors]
+        raise RuntimeError(
+            f"{entry}: arm build failed: "
+            + "; ".join(f"{k}: {errors[k]!r}" for k in failed)
+        ) from errors[failed[0]]
+    return built
 
 
 _REGISTERED = False

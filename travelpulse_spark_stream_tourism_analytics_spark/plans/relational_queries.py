@@ -22,6 +22,7 @@ from travelpulse_spark_stream_tourism_analytics_spark.functions.numeric import (
     money_sum,
 )
 from travelpulse_spark_stream_tourism_analytics_spark.plans.catalog import (
+    build_arms,
     load_table,
     query,
 )
@@ -786,45 +787,6 @@ def _trusted_supplier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def supplier_customer_trustrank(
-    spark: SparkSession, sf_dir: str, iterations: int = 4
-) -> DataFrame:
-    """TrustRank over the same purchase graph: teleport restricted to
-    the top-5 suppliers by account balance (the 'trusted seed' set) —
-    rank then measures trust flowing out of those seeds through shared
-    customers, the seed-propagation quality signal web curation runs
-    over its hyperlink graph (Gyöngyi et al. 2004)."""
-    from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
-        pagerank,
-    )
-
-    return pagerank(
-        _purchase_graph_edges(spark, sf_dir), iterations=iterations,
-        seeds=_trusted_supplier_seeds(spark, sf_dir),
-        cache_site="graph.trustrank.edges",
-    )
-
-
-def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Arm-boundary lineage truncation (round 11, VERDICT r10 item 4):
-    the iterative arms' results are tiny (O(|V|) rows) but their lazy
-    plans re-inline the whole iteration tree into every consumer —
-    graph_rank_entities' two top-50 arms formatted to 16k plan lines /
-    1621 rendered scans, and the analyzer re-walks that tree on every
-    run. An eager localCheckpoint materializes the rows once (inside
-    the arm's own build, which already runs eager per-round jobs) and
-    replaces the plan with a LogicalRDD — results are byte-identical
-    (the checkpoint stores the computed rows; oracle-pinned). Fallback
-    mirrors kcore/components: persist + count truncates nothing but
-    keeps consumers reading the cache."""
-    try:
-        return df.localCheckpoint(eager=True)
-    except Exception:  # pragma: no cover - checkpoint dir unavailable
-        df = df.persist()
-        df.count()
-        return df
-
-
 def supplier_customer_rank_variants(
     spark: SparkSession, sf_dir: str, iterations: int = 4
 ) -> DataFrame:
@@ -849,7 +811,11 @@ def supplier_customer_rank_variants(
         {"rank_pr": None, "rank_tr": _trusted_supplier_seeds(spark, sf_dir)},
         iterations=iterations,
     )
-    return _truncate_lineage(fused)
+    # The eager checkpoint stores the computed rows once, inside this
+    # build, and replaces the plan with a LogicalRDD (graph_rank_entities'
+    # two arms formatted to 16k plan lines without it); byte-identical
+    # results (oracle-pinned).
+    return fused.localCheckpoint(eager=True)
 
 
 def _trustrank_ctes(iters: int = 4) -> str:
@@ -1007,8 +973,7 @@ def graph_rank_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     are timed once, under ``graph_suite``. One ``pagerank_multi`` pass
     computes BOTH columns (operators/graph.py) — one join + one
     map-side-combined shuffle per iteration, shared across the two
-    output arms through the eager ``localCheckpoint`` that
-    ``_truncate_lineage`` applies in
+    output arms through the eager ``localCheckpoint`` at the end of
     ``supplier_customer_rank_variants``."""
     # supplier_customer_rank_variants returns the fused ranks already
     # MATERIALIZED behind an eager localCheckpoint (round 11): the two
@@ -1326,79 +1291,46 @@ def graph_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     four times, evicting each previous arm's cache and re-deriving the
     4-table join per arm (round-6 review finding).
 
-    The five arm CONSTRUCTIONS overlap on driver threads (round 10,
-    guide §2.6 "overlap independent jobs"): the iterative arms (fused
-    ranks, LPA, kcore, HyperBall) each run eager per-round jobs
-    (localCheckpoint / seed-count collects) during DataFrame BUILD,
-    and serially those jobs leave most of the cluster idle — measured
-    at sf0.1 the serial build phase was 9-10 s against a ~5 s critical
-    path (the fused power iteration). The shared trade-graph cache is
-    materialized BEFORE the threads start so concurrent arms read the
-    cache instead of racing to compute it; each arm touches only its
-    own scoped_persist sites; per-arm results are deterministic and
-    the union order is fixed, so output is bit-identical to the serial
-    build (the arm outputs are the same DataFrames either way)."""
-    from pyspark import InheritableThread
+    The five arm CONSTRUCTIONS overlap on driver threads
+    (``build_arms``): the iterative arms (fused ranks, LPA, kcore,
+    HyperBall) each run eager per-round jobs (localCheckpoint /
+    seed-count collects) during DataFrame BUILD — measured at sf0.1
+    the serial build phase was 9-10 s against a ~5 s critical path
+    (the fused power iteration)."""
     from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
         triangle_counts,
     )
 
-    built: dict[str, DataFrame] = {}
-    errors: dict[str, Exception] = {}
-
-    def _build(key, fn):
-        try:
-            built[key] = fn()
-        except Exception as e:  # surface on the caller thread;
-            # KeyboardInterrupt/SystemExit propagate (ADVICE r10)
-            errors[key] = e
+    def trade_arms() -> dict:
+        trade = _nation_trade_graph(spark, sf_dir)
+        # count() on the PERSISTED trade relation materializes the full
+        # cache (the honest barrier — un-persisted counts prune
+        # columns), so the concurrent arms below never race to build it.
+        trade.count()
+        # triangles is lineage-truncated at the arm boundary: its plan
+        # otherwise re-inlines the oriented-edge cache (and the trade
+        # lineage under it) three times into the union; the eager
+        # checkpoint also moves its three shuffles into the threaded
+        # build. Per-caller cache_site: a concurrent triangle build
+        # elsewhere must not share the oriented-edge site.
+        return build_arms("graph_suite.trade", {
+            "triangles": lambda: triangle_counts(
+                trade, cache_site="graph.triangles.suite"
+            ).localCheckpoint(eager=True),
+            "lpa": lambda: nation_trade_lpa(spark, sf_dir, trade),
+            "kcore": lambda: nation_trade_kcore(spark, sf_dir, trade),
+            "hyperball": lambda: nation_trade_hyperball(spark, sf_dir, trade),
+        })
 
     # The fused power iteration is the build's CRITICAL PATH and does
-    # not read the nation-trade graph — start its thread BEFORE the
-    # trade-cache barrier so the barrier's materialization job
-    # overlaps the first rank iterations instead of preceding them.
-    fused_t = InheritableThread(
-        target=_build,
-        args=("fused", lambda: supplier_customer_rank_variants(spark, sf_dir)),
-    )
-    fused_t.start()
-
-    trade = _nation_trade_graph(spark, sf_dir)
-    # count() on the PERSISTED trade relation materializes the full
-    # cache (the honest barrier — un-persisted counts prune columns),
-    # so the concurrent arms below never race to build it.
-    trade.count()
-
-    # triangles is lineage-truncated at the arm boundary (round 11):
-    # its plan otherwise re-inlines the oriented-edge cache (and the
-    # trade lineage under it) three times into the union; the eager
-    # checkpoint also moves its three shuffles into the threaded build
-    # where they overlap the other arms' per-round jobs. Per-caller
-    # cache_site: a concurrent triangle build elsewhere must not share
-    # the oriented-edge site (ADVICE r10 item 2).
-    builders = {
-        "triangles": lambda: _truncate_lineage(
-            triangle_counts(trade, cache_site="graph.triangles.suite")
-        ),
-        "lpa": lambda: nation_trade_lpa(spark, sf_dir, trade),
-        "kcore": lambda: nation_trade_kcore(spark, sf_dir, trade),
-        "hyperball": lambda: nation_trade_hyperball(spark, sf_dir, trade),
-    }
-    threads = [fused_t] + [
-        InheritableThread(target=_build, args=(k, fn))
-        for k, fn in builders.items()
-    ]
-    for t in threads[1:]:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise RuntimeError(
-            "graph_suite: arm build failed: "
-            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
-        ) from next(iter(errors.values()))
-
-    fused = built["fused"]
+    # not read the nation-trade graph: it runs beside the whole trade
+    # arm, so the trade-cache barrier overlaps the first rank
+    # iterations instead of preceding them.
+    outer = build_arms("graph_suite", {
+        "fused": lambda: supplier_customer_rank_variants(spark, sf_dir),
+        "trade": trade_arms,
+    })
+    fused, built = outer["fused"], outer["trade"]
     parts = [
         fused.select(
             F.lit("pagerank").alias("component"),
@@ -1722,60 +1654,29 @@ def nation_key_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = nation_keys_except(spark, sf_dir).select(
         F.lit("except").alias("set_op"), "nationkey"
     )
-    # The iterative graph arms (LPA, kcore, HyperBall) run eager
-    # per-round localCheckpoint jobs at BUILD time; serially those
-    # jobs leave the cluster mostly idle (round 10, guide §2.6 —
-    # the graph_suite pattern). Materialize the shared trade cache
-    # first (the honest full-cache barrier: un-persisted counts prune
-    # columns) so concurrent arms read it instead of racing to
-    # compute it, then overlap the arm builds on InheritableThreads.
-    # Each arm touches only its own checkpoint/persist sites; the
-    # assembly and union order below are unchanged, so output is
-    # bit-identical to the serial build (driver-oracled).
-    from pyspark import InheritableThread
     from travelpulse_spark_stream_tourism_analytics_spark.operators.graph import (
         hyperball,
         kcore,
         triangle_counts,
     )
 
+    # The iterative graph arms (LPA, kcore, HyperBall) run eager
+    # per-round localCheckpoint jobs at BUILD time, so they are built
+    # on threads (build_arms) after the shared trade cache is
+    # materialized (the honest full-cache barrier: un-persisted counts
+    # prune columns). triangles: lineage-truncated + per-caller
+    # oriented-edge cache site, same rationale as graph_suite.
     trade = _nation_trade_graph(spark, sf_dir)
     trade.count()
     thr = _median_thresholded(trade)
-
-    built: dict[str, DataFrame] = {}
-    errors: dict[str, Exception] = {}
-
-    def _build(key, fn):
-        try:
-            built[key] = fn()
-        except Exception as exc:  # surface on the caller thread;
-            # KeyboardInterrupt/SystemExit propagate (ADVICE r10)
-            errors[key] = exc
-
-    # triangles: lineage-truncated + per-caller oriented-edge cache
-    # site, same rationale as graph_suite (round 11).
-    builders = {
+    built = build_arms("nation_key_set_ops", {
         "lpa": lambda: label_propagation(undirect(trade), iterations=3),
-        "triangles": lambda: _truncate_lineage(
-            triangle_counts(trade, cache_site="graph.triangles.setops")
-        ),
+        "triangles": lambda: triangle_counts(
+            trade, cache_site="graph.triangles.setops"
+        ).localCheckpoint(eager=True),
         "kcore": lambda: kcore(thr, k=14),
         "hyperball": lambda: hyperball(thr, max_t=3),
-    }
-    threads = [
-        InheritableThread(target=_build, args=(k, fn))
-        for k, fn in builders.items()
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise RuntimeError(
-            "nation_key_set_ops: arm build failed: "
-            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
-        ) from next(iter(errors.values()))
+    })
 
     communities = built["lpa"].select(
         F.concat(F.lit("lpa_"), F.col("label")).alias("set_op"),

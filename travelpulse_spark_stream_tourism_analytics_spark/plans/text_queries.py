@@ -37,6 +37,7 @@ from travelpulse_spark_stream_tourism_analytics_spark.operators._cache import (
     scoped_persist,
 )
 from travelpulse_spark_stream_tourism_analytics_spark.plans.catalog import (
+    build_arms,
     load_table,
     query,
     repair_coarse_scan,
@@ -562,35 +563,11 @@ def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Language ID + multimodal plumbing
+# Language ID
 # ---------------------------------------------------------------------------
 
 _EN_BIGRAMS = ["th", "he", "in", "er", "an", "re", "on", "at"]
 _IT_BIGRAMS = ["di", "la", "to", "ia", "ta", "ra", "no", "le"]
-
-
-def _profile_sql(profile: list[str]) -> str:
-    return "[" + ", ".join(f"'{b}'" for b in profile) + "]"
-
-
-def multimodal_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload metadata: multimodal columns are opaque binary +
-    typed metadata structs (north-star multimodal surface)."""
-    docs = load_table(spark, sf_dir, "documents")
-    blobbed = multimodal.attach_blob(docs)
-    return blobbed.select(
-        "doc_id",
-        F.col("meta.n_bytes").cast("long").alias("n_bytes"),
-        F.col("meta.mime").alias("mime"),
-    )
-
-
-def multimodal_blob_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched mapInPandas feature extraction over binary
-    payloads (decode step stubbed deterministically — container has no
-    codec libs; see operators/multimodal.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return multimodal.extract_blob_features(multimodal.attach_blob(docs))
 
 
 @query(
@@ -2098,19 +2075,6 @@ def docs_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         term_count_sketches,
     )
 
-    # Several branch constructors run EAGER driver jobs at BUILD time
-    # (the unigram-LM vocabulary collects, BM25 corpus stats, both
-    # count-min sketch builds, the exact top-20 collect, tf-idf's doc
-    # count) — serially they cost ~5-6 s at sf0.1 with the cluster
-    # mostly idle between jobs. Build those leaves on
-    # InheritableThreads (round 10, guide §2.6 "overlap independent
-    # jobs" — the graph_suite / embedding_knn_variants plan_build
-    # pattern): every thread owns an independent relation with no
-    # shared cache site, the assembly below and the union order are
-    # unchanged, so the entry's output is bit-identical to the serial
-    # build (oracle-pinned at sf0.01/sf0.001).
-    from pyspark import InheritableThread
-
     eps = 0.001
     bm25_queries = spark.createDataFrame(
         [(0, "spark hash join"), (1, "dup window sort"),
@@ -2121,17 +2085,11 @@ def docs_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
 
-    built: dict[str, object] = {}
-    errors: dict[str, Exception] = {}
-
-    def _build(key, fn):
-        try:
-            built[key] = fn()
-        except Exception as e:  # surface on the caller thread;
-            # KeyboardInterrupt/SystemExit propagate (ADVICE r10)
-            errors[key] = e
-
-    builders = {
+    # Built on threads (build_arms): the unigram-LM vocabulary
+    # collects, BM25 corpus stats, both count-min sketch builds, the
+    # exact top-20 collect and tf-idf's doc count run EAGER jobs at
+    # build time, ~5-6 s at sf0.1 when serial.
+    built = build_arms("docs_top_terms", {
         "tfidf": lambda: tfidf_top_keywords(
             toks_rel, top_k=3, tokens_col="__toks"
         ),
@@ -2156,20 +2114,7 @@ def docs_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lex_bm25": lambda: bm25_rank(
             toks_rel, qdocs, top_n=11, tokens_col="__toks"
         ),
-    }
-    threads = [
-        InheritableThread(target=_build, args=(k, fn))
-        for k, fn in builders.items()
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise RuntimeError(
-            "docs_top_terms: builder failed: "
-            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
-        ) from next(iter(errors.values()))
+    })
 
     tfidf = built["tfidf"].select(
         F.lit("tfidf").alias("branch"),
@@ -3838,31 +3783,12 @@ def embedding_knn_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.as_double_vec(F.col("embedding")).alias("v"),
         "label",
     )
-    # Branch constructions overlap on driver threads (guide §2.6
-    # "overlap independent jobs"; the same round-10 pattern as
-    # graph_suite's arm builds): five constructors run EAGER
-    # driver-side jobs at build time (semantic_dedup / ivf_knn_graph
-    # centroid collects, two_level's fine count + coarse collect,
-    # decontam's bounded eval-size check, pq_search_adc's bounded
-    # query collect) and the lazy ones still pay serial py4j
-    # round-trip chatter — serially the build dominated the entry's
-    # plan_build wall. Each constructor touches only its own
-    # scoped_persist site, the operator results are deterministic, and
-    # the union order below is fixed — output identical to the serial
-    # build.
-    from pyspark import InheritableThread
-
-    built: dict = {}
-    errors: dict = {}
-
-    def _build(key, fn):
-        try:
-            built[key] = fn()
-        except Exception as e:  # surface on the caller thread;
-            # KeyboardInterrupt/SystemExit propagate (ADVICE r10)
-            errors[key] = e
-
-    builders = {
+    # Built on threads (build_arms): five constructors run EAGER jobs
+    # at build time (semantic_dedup / ivf_knn_graph centroid collects,
+    # two_level's fine count + coarse collect, decontam's bounded
+    # eval-size check, pq_search_adc's bounded query collect), and
+    # serially the build dominated the entry's plan_build wall.
+    built = build_arms("embedding_knn_variants", {
         "brute": lambda: embedding_knn(spark, sf_dir),
         "ivf": lambda: embedding_ivf_seeded_knn(spark, sf_dir),
         "int8": lambda: similarity.brute_force_knn(
@@ -3907,20 +3833,7 @@ def embedding_knn_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
             embl, queries, "vec_id", "query_id", F.col("label") == 2,
             vec_col="v", k=5, strategy="postfilter", oversample=4,
         ),
-    }
-    threads = [
-        InheritableThread(target=_build, args=(key, fn))
-        for key, fn in builders.items()
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise RuntimeError(
-            "embedding_knn_variants: branch build failed: "
-            + "; ".join(f"{k}: {e!r}" for k, e in errors.items())
-        ) from next(iter(errors.values()))
+    })
 
     brute = built["brute"].select(
         F.lit("brute").alias("variant"), "query_id", "neighbor_id",

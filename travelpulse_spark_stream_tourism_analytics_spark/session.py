@@ -49,10 +49,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app_name: str = "travelpulse-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "travelpulse-spark") -> SparkSession:
     """Build (or reuse) a SparkSession with scale-ready defaults.
 
     - AQE on: runtime partition coalescing, skew-join splitting and
@@ -62,15 +59,17 @@ def get_spark(
       regardless of host locale (events carry naive UTC timestamps).
     - Arrow on: vectorized pandas interchange for the few Pandas-UDF
       operators.
+
+    Two environment variables are deployment settings:
+    ``SPARK_GRAFT_CPUS`` (local cores and the default shuffle partition
+    count, 32) and ``SPARK_DRIVER_MEMORY`` (8g).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -86,7 +85,7 @@ def get_spark(
         # unaffected; 64 MB/partition bounds per-task build memory.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_MAX", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Sized from measured working sets (distinct generated classes
@@ -138,24 +137,11 @@ def get_spark(
         # isolated steady state — OPTIMIZATION_r10.md "Bench-context
         # JVM degradation"). Production-relevant for any long-running
         # driver (streaming topologies, query servers), not a
-        # local-mode tune; env-overridable for operators who want
-        # deeper history for debugging.
-        .config(
-            "spark.sql.ui.retainedExecutions",
-            os.environ.get("SPARK_GRAFT_RETAINED_EXECUTIONS", "16"),
-        )
-        .config(
-            "spark.ui.retainedJobs",
-            os.environ.get("SPARK_GRAFT_RETAINED_JOBS", "200"),
-        )
-        .config(
-            "spark.ui.retainedStages",
-            os.environ.get("SPARK_GRAFT_RETAINED_STAGES", "200"),
-        )
-        .config(
-            "spark.ui.retainedTasks",
-            os.environ.get("SPARK_GRAFT_RETAINED_TASKS", "2000"),
-        )
+        # local-mode tune.
+        .config("spark.sql.ui.retainedExecutions", "16")
+        .config("spark.ui.retainedJobs", "200")
+        .config("spark.ui.retainedStages", "200")
+        .config("spark.ui.retainedTasks", "2000")
         # NOTE: deliberately NOT disabling
         # spark.sql.streaming.statefulOperator.checkCorrectness — the
         # engine's streaming shapes are all supported forms, and the
